@@ -18,6 +18,7 @@ Conventions that keep the cross-engine value-hash stable (FIXTURES.md §6):
 
 from __future__ import annotations
 
+import functools
 import importlib
 from collections.abc import Callable
 
@@ -69,13 +70,12 @@ def load_all() -> None:
 
 def register(name: str, oracle: str | None = None):
     def deco(fn: Callable[[SparkSession, str], DataFrame]):
+        @functools.wraps(fn)
         def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
             # driver hands us its own session; pin runtime-settable conf
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             return fn(spark, sf_dir)
 
-        wrapped.__name__ = fn.__name__
-        wrapped.__doc__ = fn.__doc__
         if name in QUERIES:
             raise ValueError(f"duplicate query id {name}")
         QUERIES[name] = wrapped

@@ -35,6 +35,15 @@ instead of the reference's at-most-once; the landing sink's dedup-on-id
 then makes it effectively exactly-once.  The blessed durable topology is
 still SSE → raw parquet landing (replayable) → analytics, mirroring the
 reference's SSE → Kafka → ksqlDB split.
+
+Batch size: each micro-batch drains everything the client has buffered,
+so a backlog lands in one trigger instead of paying the trigger's fixed
+cost (offset log, commit log, job launch) once per slice of it.  The
+buffer's own bound, `sse.buffer.max` (default 100000 events), is the only
+default bound on batch size and memory.  `maxEventsPerBatch` caps a
+batch on request (the reference's Step-8 batch-size setting) and has no
+default — the same policy as Spark's own `maxOffsetsPerTrigger` (Kafka)
+and `maxFilesPerTrigger` (files).
 """
 
 from __future__ import annotations
@@ -481,62 +490,43 @@ def _rows_to_arrow(rows: list) -> list:
 
 class SSEStreamReader(SimpleDataSourceStreamReader):
     """Driver-side micro-batch reader.  Offsets are session-monotonic event
-    counters — synthetic, because SSE has no replayable offsets (§1.3);
-    `readBetweenOffsets` replays only within the in-memory session cache."""
+    counters — synthetic, because SSE has no replayable offsets (§1.3).
+
+    The client is created and subscribed on the first `read()`, not here:
+    Spark's read planning builds a reader of its own (PySpark's
+    `_streamReader`) that never reads, and must not hold a second live
+    subscription.  Each `read()` drains the whole buffer unless the
+    opt-in `maxEventsPerBatch` caps it."""
 
     def __init__(self, options):
-        cfg = _parse_options(options)
-        self.max_events_per_batch = int(options.get("maxEventsPerBatch", "10000"))
-        self.client = SSEClient(**cfg)
-        self.client.start()
-        self._offset = 0
-        self._cache: dict[tuple[int, int], list] = {}
-
-    def __getstate__(self):
-        """Spark pickles the reader to executors for replay reads; the live
-        client (threads/locks/socket) stays driver-side.  The executor copy
-        serves readBetweenOffsets from the shipped row cache only."""
-        state = self.__dict__.copy()
-        state["client"] = None
-        return state
+        self._cfg = _parse_options(options)
+        cap = options.get("maxEventsPerBatch")
+        self.max_events_per_batch = int(cap) if cap is not None else None
+        self.client: SSEClient | None = None
 
     def initialOffset(self) -> dict:
         return {"offset": 0}
 
     def read(self, start: dict):
-        assert self.client is not None, "read() must run on the driver"
+        if self.client is None:
+            self.client = SSEClient(**self._cfg)
+            self.client.start()
         rows = self.client.drain(self.max_events_per_batch)
         if self.client._error and not rows and not self.client.healthy():
             # fail-stop propagation (ServerSentEventClient.java:720-756)
             raise RuntimeError(
                 f"SSE connection unhealthy: {self.client._error}"
             )
-        start_off = start.get("offset", 0)
-        end_off = start_off + len(rows)
-        batches = _rows_to_arrow(rows)
-        self._cache[(start_off, end_off)] = batches
-        # bound the replay cache
-        if len(self._cache) > 64:
-            self._cache.pop(next(iter(self._cache)))
-        return iter(batches), {"offset": end_off}
-
-    def commit(self, end: dict) -> None:
-        """Spark has durably committed everything up to `end`: drop cached
-        batches at or below it so the replay cache (which rides along when
-        the reader is pickled per batch) stays O(uncommitted)."""
-        committed = end.get("offset", 0)
-        self._cache = {
-            k: v for k, v in self._cache.items() if k[1] > committed
-        }
+        end_off = start.get("offset", 0) + len(rows)
+        return iter(_rows_to_arrow(rows)), {"offset": end_off}
 
     def readBetweenOffsets(self, start: dict, end: dict):
-        key = (start.get("offset", 0), end.get("offset", 0))
-        batches = self._cache.get(key)
-        if batches is None:
-            # session-replay only; a restarted query resumes from "now",
-            # matching the reference's documented non-guarantee
-            return iter(())
-        return iter(batches)
+        """Reached only on a query restart, for the batch the offset log
+        planned but did not commit: PySpark's prefetch cache serves every
+        batch read within a run.  SSE cannot replay it, so a restarted
+        query resumes from "now", matching the reference's documented
+        non-guarantee."""
+        return iter(())
 
     def stop(self) -> None:
         if self.client is not None:

@@ -545,6 +545,15 @@ def s_checkpoint_resume(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _paced_state_partitions(session_default: int, staged_bytes: int) -> int:
+    """State partitions for a stream-stream join over `staged_bytes` of
+    input: ~64 MB per partition with a floor of 8, never above the
+    session default.  The session clamp is outermost, so on a host with
+    fewer than 8 cores the join keeps the session's count; at production
+    volume it keeps the session's own sizing."""
+    return min(session_default, max(8, -(-staged_bytes // (64 << 20))))
+
+
 @register(
     "s_join_stream_stream_outer",
     oracle="""
@@ -658,22 +667,16 @@ def s_join_stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     # volume (tools/ab_stream_join.py, round 10: p50 4.52 s @32
     # partitions -> 1.03 s @8 at ~12.5k rows/batch), so at this op's
     # 3-batch backfill the session's core-count default is pure fixed
-    # cost.  Scale-adaptive, not a local[32] constant: ~64 MB of staged
-    # input per partition with the bench tier's floor of 8, clamped to
-    # the session default — at production volume the clamp keeps the
-    # session's own sizing and this is a no-op.  Results are unchanged
-    # (state partitioning never affects which rows a watermarked join
-    # emits); conf restored even on failure.
+    # cost.  Scale-adaptive, not a local[32] constant (see
+    # `_paced_state_partitions`).  Results are unchanged (state
+    # partitioning never affects which rows a watermarked join emits);
+    # conf restored even on failure.
     from ..io import fixture_bytes
 
     parts_key = "spark.sql.shuffle.partitions"
     prev_parts = spark.conf.get(parts_key)
-    paced = max(
-        8,
-        min(
-            int(prev_parts),
-            -(-fixture_bytes(sf_dir, "events") // (64 << 20)),
-        ),
+    paced = _paced_state_partitions(
+        int(prev_parts), fixture_bytes(sf_dir, "events")
     )
     spark.conf.set(parts_key, str(paced))
     try:

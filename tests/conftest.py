@@ -1,8 +1,15 @@
+import os
 import sys
+from pathlib import Path
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# test the checkout these tests live in, in this process and in the Python
+# workers Spark starts (they inherit PYTHONPATH, not sys.path)
+REPO = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(REPO))
+_old = os.environ.get("PYTHONPATH")
+os.environ["PYTHONPATH"] = os.pathsep.join([str(REPO)] + ([_old] if _old else []))
 
 SF_DIR = "/root/testdata/sf0.001"
 

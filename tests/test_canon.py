@@ -15,13 +15,17 @@ import decimal
 import importlib.util
 import sys
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def _load_canon():
     spec = importlib.util.spec_from_file_location(
-        "check_correctness", "/root/repo/tools/check_correctness.py"
+        "check_correctness", REPO / "tools" / "check_correctness.py"
     )
     mod = importlib.util.module_from_spec(spec)
     sys.modules["check_correctness"] = mod

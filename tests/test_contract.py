@@ -43,3 +43,17 @@ def test_every_oracle_column_set_matches(spark):
         checked += 1
     assert checked > 100
     assert not mismatches, mismatches
+
+
+def test_registered_wrapper_unwraps_to_operator():
+    """registry.register's wrapper carries the operator's identity, so
+    inspect and tracebacks resolve to the operator's own module."""
+    import inspect
+
+    wrapped = queries()["q_agg_groupby"]
+    fn = inspect.unwrap(wrapped)
+    assert fn is not wrapped
+    assert fn.__module__ == "kafka_connect_sse_spark.operators.aggregates"
+    assert wrapped.__module__ == fn.__module__
+    assert wrapped.__qualname__ == fn.__qualname__ == "q_agg_groupby"
+    assert inspect.getsourcefile(fn).endswith("operators/aggregates.py")

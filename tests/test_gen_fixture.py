@@ -11,10 +11,13 @@ import hashlib
 import os
 import subprocess
 import sys
+from pathlib import Path
 
 import pyarrow.parquet as pq
 
-TOOL = "/root/repo/tools/gen_fixture.py"
+REPO = Path(__file__).resolve().parents[1]
+
+TOOL = str(REPO / "tools" / "gen_fixture.py")
 
 
 def _gen(out: str, extra: list[str] | None = None) -> None:

@@ -26,6 +26,8 @@ silently:
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import duckdb
 import pytest
 
@@ -35,6 +37,8 @@ from kafka_connect_sse_spark.operators.dedup import (
     SHINGLE_K,
     minhash_candidates,
 )
+
+REPO = Path(__file__).resolve().parents[1]
 
 
 def miss_prob(j: float) -> float:
@@ -207,7 +211,7 @@ def test_generated_sf1_fixture_stays_in_high_recall_regime():
     50k docs).  Skipped when the tier has not been generated."""
     import os
 
-    path = "/root/repo/testdata/sf1/documents.parquet"
+    path = str(REPO / "testdata" / "sf1" / "documents.parquet")
     if not os.path.exists(path):
         pytest.skip("sf1 tier not generated (tools/gen_fixture.py --sf 1)")
     rows = duckdb.sql(_TRUTH_SQL_INVERTED.format(path=path)).fetchall()

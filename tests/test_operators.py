@@ -1,6 +1,8 @@
 """Operator-level semantic tests at sf0.001 (fast sanity between full
 oracle runs; the authoritative check is tools/check_correctness.py)."""
 
+from pathlib import Path
+
 import pytest
 
 from pyspark.sql import functions as F
@@ -9,6 +11,7 @@ from kafka_connect_sse_spark.io import load_table
 from kafka_connect_sse_spark.registry import oracle_sql, queries
 
 SF = "/root/testdata/sf0.001"
+REPO = Path(__file__).resolve().parents[1]
 
 
 @pytest.fixture(scope="module")
@@ -340,7 +343,7 @@ def test_coverage_doc_renders_every_op_as_full_table_row(qs):
     changes; this pins the rendered artifact."""
     import re
 
-    text = open("/root/repo/COVERAGE.md").read()
+    text = open(REPO / "COVERAGE.md").read()
     rows = {}
     for m in re.finditer(
         r"^\| `([a-z0-9_]+)` \| (EXACT|WEAK) \| `[^`]+` \| .+ \|$",

@@ -4,8 +4,11 @@ inside tools/sf1_gate.py before every sweep (VERDICT r9 item 5)."""
 
 import importlib.util
 import os
+from pathlib import Path
 
 import pytest
+
+REPO = Path(__file__).resolve().parents[1]
 
 spec = importlib.util.spec_from_file_location(
     "plan_audit",
@@ -89,7 +92,7 @@ def test_scale_toc_is_fresh():
 
     r = subprocess.run(
         [sys.executable, "tools/gen_scale_toc.py"],
-        cwd="/root/repo",
+        cwd=REPO,
         capture_output=True,
         text=True,
     )

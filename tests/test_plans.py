@@ -3,6 +3,7 @@ pushdown reaches the scan, pruning shrinks ReadSchema, dims broadcast,
 aggregates partial-combine, top-k avoids full sort."""
 
 
+import pytest
 from pyspark.sql import functions as F
 
 from kafka_connect_sse_spark.io import load_table
@@ -1228,3 +1229,30 @@ def test_connected_comp_iterations_reuse_checkpointed_edges(spark):
     plan = formatted_plan(queries()["q_graph_connected_comp"](spark, SF))
     assert "Scan parquet" not in plan, plan
     assert "Scan ExistingRDD" in plan, plan
+
+
+@pytest.mark.parametrize(
+    "key, value",
+    [
+        ("spark.sql.files.maxPartitionBytes", "128MB"),
+        ("spark.sql.files.maxPartitionBytes", "128m"),
+        ("spark.sql.files.maxPartitionBytes", "64k"),
+        ("spark.sql.files.openCostInBytes", "1MB"),
+    ],
+)
+def test_scan_partition_estimate_reads_byte_strings(spark, key, value):
+    """spread()'s scan-partition estimate parses byte-size confs as Spark
+    does, and matches the partitions each fixture table's scan really
+    produces."""
+    from kafka_connect_sse_spark.io import TABLES, table_path
+    from kafka_connect_sse_spark.plans import _scan_partitions
+
+    prev = spark.conf.get(key)
+    spark.conf.set(key, value)
+    try:
+        for t in TABLES:
+            # a fresh DataFrame: Dataset.rdd is planned once per object
+            df = spark.read.parquet(table_path(SF, t))
+            assert _scan_partitions(df) == df.rdd.getNumPartitions(), t
+    finally:
+        spark.conf.set(key, prev)

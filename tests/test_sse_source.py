@@ -10,6 +10,7 @@ import pytest
 
 from kafka_connect_sse_spark.sources.sse import (
     SSEClient,
+    SSEStreamReader,
     _parse_options,
     register_sse_source,
 )
@@ -47,6 +48,50 @@ def server():
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
     yield f"http://127.0.0.1:{srv.server_address[1]}/stream"
+    srv.shutdown()
+    srv.server_close()
+
+
+class CountingHandler(BaseHTTPRequestHandler):
+    """Counts subscriptions; serves `n_events` numbered events, then holds
+    the stream open with keepalives until `closing` is set."""
+
+    connections = 0
+    n_events = 0
+    closing = threading.Event()
+
+    def log_message(self, *a):
+        pass
+
+    def do_GET(self):
+        type(self).connections += 1
+        self.send_response(200)
+        self.send_header("Content-Type", "text/event-stream")
+        self.end_headers()
+        body = "".join(
+            f"event: edit\nid: {i}\ndata: {{\"n\": {i}}}\n\n"
+            for i in range(type(self).n_events)
+        )
+        try:
+            self.wfile.write(body.encode())
+            self.wfile.flush()
+            while not type(self).closing.wait(0.1):
+                self.wfile.write(b": keepalive\n\n")
+                self.wfile.flush()
+        except (BrokenPipeError, ConnectionResetError):
+            pass
+
+
+@pytest.fixture()
+def counting_server():
+    CountingHandler.connections = 0
+    CountingHandler.n_events = 12_000  # above the old 10k per-batch default
+    CountingHandler.closing.clear()
+    srv = ThreadingHTTPServer(("127.0.0.1", 0), CountingHandler)
+    t = threading.Thread(target=srv.serve_forever, daemon=True)
+    t.start()
+    yield f"http://127.0.0.1:{srv.server_address[1]}/stream"
+    CountingHandler.closing.set()
     srv.shutdown()
     srv.server_close()
 
@@ -181,3 +226,74 @@ def test_spark_streaming_ingest(spark, server):
         q.stop()
     rows = {(r.event, r.id, r.data) for r in spark.table("sse_e2e_test").collect()}
     assert rows == set(EVENTS)
+
+
+def test_reader_subscribes_on_first_read(counting_server):
+    """Spark's planner builds a reader that never reads; constructing (and
+    stopping) one must not open a subscription."""
+    idle = SSEStreamReader({"uri": counting_server})
+    idle.stop()  # safe before any read
+    reader = SSEStreamReader({"uri": counting_server})
+    try:
+        time.sleep(0.5)
+        assert CountingHandler.connections == 0
+        reader.read({"offset": 0})
+        assert wait_for(lambda: CountingHandler.connections == 1)
+    finally:
+        reader.stop()
+    assert CountingHandler.connections == 1
+
+
+def _read_rows(reader, start):
+    batches, end = reader.read({"offset": start})
+    return sum(b.num_rows for b in batches), end["offset"]
+
+
+def test_read_drains_whole_buffer_by_default(counting_server):
+    n = CountingHandler.n_events
+    reader = SSEStreamReader({"uri": counting_server})
+    try:
+        assert _read_rows(reader, 0) == (0, 0)  # subscribes; nothing yet
+        assert wait_for(lambda: reader.client.metrics["events.total"] >= n)
+        assert _read_rows(reader, 0) == (n, n)
+    finally:
+        reader.stop()
+
+
+def test_max_events_per_batch_is_an_opt_in_cap(counting_server):
+    n = CountingHandler.n_events
+    reader = SSEStreamReader({"uri": counting_server, "maxEventsPerBatch": "5000"})
+    try:
+        _read_rows(reader, 0)
+        assert wait_for(lambda: reader.client.metrics["events.total"] >= n)
+        assert _read_rows(reader, 0) == (5000, 5000)
+        assert _read_rows(reader, 5000) == (5000, 10000)
+        assert _read_rows(reader, 10000) == (n - 10000, n)
+    finally:
+        reader.stop()
+
+
+def test_spark_query_holds_one_subscription(spark, counting_server):
+    """Spark builds a second reader for read planning; only the reader
+    that serves micro-batches may subscribe."""
+    register_sse_source(spark)
+    q = (
+        spark.readStream.format("sse")
+        .option("uri", counting_server)
+        .load()
+        .writeStream.format("memory")
+        .queryName("sse_one_subscription_test")
+        .outputMode("append")
+        .trigger(processingTime="300 milliseconds")
+        .start()
+    )
+    try:
+        assert wait_for(
+            lambda: spark.table("sse_one_subscription_test").count()
+            >= CountingHandler.n_events,
+            timeout=60,
+        )
+        time.sleep(1.0)  # a second subscription would have connected by now
+    finally:
+        q.stop()
+    assert CountingHandler.connections == 1

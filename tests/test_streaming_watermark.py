@@ -13,9 +13,13 @@ import shutil
 import time
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
-from kafka_connect_sse_spark.io import scratch_dir
+from kafka_connect_sse_spark.io import fixture_bytes, scratch_dir
+from kafka_connect_sse_spark.streaming.queries import _paced_state_partitions
+
+from conftest import SF_DIR
 
 
 def test_watermark_evicts_old_window_state(spark):
@@ -71,3 +75,17 @@ def test_watermark_evicts_old_window_state(spark):
     assert old == [5], out
     assert ("2024-01-02 10:00", 10) in out
     shutil.rmtree(base, ignore_errors=True)
+
+
+@pytest.mark.parametrize("cores, expected", [(4, 4), (32, 8)])
+def test_join_state_partitions_never_exceed_session_default(cores, expected):
+    """s_join_stream_stream_outer's pacing on the sf0.001 fixture: the
+    floor of 8 applies only below the session default (shuffle
+    partitions = cores), so a 4-core host keeps 4 and never pays for 8."""
+    staged = fixture_bytes(SF_DIR, "events")
+    assert _paced_state_partitions(cores, staged) == expected
+
+
+def test_join_state_partitions_scale_with_volume():
+    assert _paced_state_partitions(256, 1 << 30) == 16  # 64 MB each
+    assert _paced_state_partitions(32, 10 << 30) == 32  # session clamp
